@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_parser_spark.materialize import materialize
+
 BLOCK_TAGS = {
     "p", "div", "section", "article", "aside", "nav", "footer", "header",
     "h1", "h2", "h3", "h4", "h5", "h6", "li", "td", "th", "ul", "ol",
@@ -405,10 +407,10 @@ def normalize_html_flat(
     The added work is proportional to the html subset only — one Arrow
     tokenizer crossing over html rows, one (doc_id, seq) block fold,
     one co-partitioned equi-join back to the html rows' slots — and
-    with ``cache_html`` the (tiny) rewritten-rows table is persisted
-    eagerly so the pipeline's several downstream consumers re-scan
-    ONLY the parquet ``rest`` branch they would scan anyway, never the
-    Python stage.
+    with ``cache_html`` the (tiny) rewritten-rows table is materialized
+    eagerly (``materialize``) so the pipeline's several downstream
+    consumers re-scan ONLY the parquet ``rest`` branch they would scan
+    anyway, never the Python stage.
 
     Semantic divergence from ``strip_html_spans`` (documented, tested):
     spans that strip to pure boilerplate are dropped from the FLAT
@@ -479,12 +481,7 @@ def normalize_html_flat(
         .filter(F.col("text") != "")
     )
     if cache_html:
-        from pyspark.storagelevel import StorageLevel
-
-        rewritten = rewritten.persist(StorageLevel.MEMORY_AND_DISK)
-        rewritten.count()
-        if cache_registry is not None:
-            # hand the persist handle to the caller (PipelineResult
-            # unpersists it with the other stage tables — no cache leak)
-            cache_registry.append(rewritten)
+        # the release goes to the caller (PipelineResult.unpersist drops
+        # it with the other stage barriers — no block leak)
+        rewritten = materialize(rewritten, cache_registry)
     return rest.unionByName(rewritten)

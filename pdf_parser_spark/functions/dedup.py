@@ -29,37 +29,17 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdf_parser_spark.materialize import materialize
 from pdf_parser_spark.operators.exprs import let_bound
 
 Materializer = Callable[[DataFrame], DataFrame]
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Default stage-table stand-in: eager ``localCheckpoint``.
-
-    Truncates the lineage so downstream self-joins don't re-run the md5
-    fold per branch (CollapseProject re-inlining), and its blocks are
-    released by the ContextCleaner when the DataFrame is dropped —
-    ``persist()`` here leaked one MEMORY_AND_DISK entry per invocation
-    for the session lifetime (nobody could unpersist it).
-
-    Fault-tolerance trade-off (ADVICE r2): localCheckpoint stores
-    executor-LOCAL blocks, so losing an executor fails the job instead
-    of recomputing.  Fine for interactive/driver-contract runs; a
-    long-lived production job at 10^12 docs should pass its own
-    ``materializer`` — ``stage_table_materializer`` below (write-then-
-    read of the signatures stage table, the Iceberg stage-boundary
-    pattern; resumable via streaming/lineage.run_resumable_dedup) or
-    ``lambda df: df.checkpoint(eager=True)`` with a reliable checkpoint
-    dir — so recovery replays from durable storage."""
-    return df.localCheckpoint(eager=True)
 
 
 def stage_table_materializer(out_dir: str, name: str) -> Materializer:
     """DURABLE materializer: write the stage to a table (``iceberg:``
     ref or parquet dir via the sources/tables seam) and hand back the
     read — the production alternative to the executor-local default
-    (``_materialize``), whose blocks die with an executor.  Recovery
+    (``materialize``), whose blocks die with an executor.  Recovery
     replays from storage; combined with the lineage runner
     (streaming/lineage.run_resumable_dedup) a killed job resumes
     without recomputing the signatures fold."""
@@ -226,7 +206,7 @@ def lsh_candidate_pairs(
 
     ``materializer`` controls how the signatures stage is pinned before
     the self-join fan-out (default: executor-local checkpoint — see
-    ``_materialize`` for the fault-tolerance trade-off and the
+    ``materialize`` for the fault-tolerance trade-off and the
     production alternative).
     """
     rows = n_hashes // n_bands
@@ -234,7 +214,7 @@ def lsh_candidate_pairs(
     # references would otherwise inline (CollapseProject) and re-run the
     # md5 fold once per band and once per join side — in production this
     # is the signatures stage table.
-    sigs = (materializer or _materialize)(
+    sigs = (materializer or materialize)(
         minhash_df(df, id_col, text_col, n_hashes, k)
     )
     banded = sigs.select(
@@ -473,7 +453,7 @@ def simhash_candidate_pairs(
         F.col(id_col).alias("id"),
         simhash64(F.col(text_col), k).alias("fp"),
     )
-    fps = (materializer or _materialize)(fps)
+    fps = (materializer or materialize)(fps)
     banded = fps.select(
         "id",
         "fp",

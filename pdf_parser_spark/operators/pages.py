@@ -381,14 +381,15 @@ def span_sequence_skew_df(
     bit-identical to ``span_sequence_df`` on the whole input.
 
     Mega detection is evaluated eagerly at plan-construction time (a
-    tiny collect — pathological docs are rare by definition).  Pass the
-    PRE-explode ``docs`` table to make it a map-only
-    ``size(spans) > threshold`` filter with ZERO shuffle; without it the
-    fallback is a map-side-combined count over ``valid``, whose exchange
-    still carries one row per doc_id — a corpus-sized shuffle at
-    10^12 docs.  ``size(spans)`` counts quarantined spans too, so it can
-    only over-route a borderline doc to the two-phase path — routing is
-    physical only, the output is bit-identical either way.
+    collect of at most 1001 ids — pathological docs are rare by
+    definition).  Pass the PRE-explode ``docs`` table to make it a
+    map-only ``size(spans) > threshold`` filter with ZERO shuffle;
+    without it the fallback is a map-side-combined count over ``valid``,
+    whose exchange still carries one row per doc_id — a corpus-sized
+    shuffle at 10^12 docs.  ``size(spans)`` counts quarantined spans
+    too, so it can only over-route a borderline doc to the two-phase
+    path — routing is physical only, the output is bit-identical either
+    way.
 
     With no mega docs the single-window plan is returned UNCHANGED — no
     tag join, no empty union branch re-scanning the corpus per
@@ -405,7 +406,12 @@ def span_sequence_skew_df(
         ).select("doc_id")
     else:
         mega_src = mega_doc_ids(valid, cfg)
-    ids = [r.doc_id for r in mega_src.collect()]
+    # probe at most 1001 ids: the driver never holds more than the
+    # literal-filter branch can use, whatever the corpus.  Ordered, so
+    # the probe is one job over every partition (top-1001 per task)
+    # rather than a take that scans partitions in growing rounds.
+    probe = mega_src.orderBy("doc_id").limit(1001)
+    ids = [r.doc_id for r in probe.collect()]
     if not ids:
         return span_sequence_df(valid)
     if len(ids) <= 1000:

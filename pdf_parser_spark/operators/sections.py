@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
+from pdf_parser_spark.materialize import materialize
 from pdf_parser_spark.operators import headings
 from pdf_parser_spark.operators.exprs import non_blank, py_strip
 from pdf_parser_spark.oracle import refsem
@@ -98,8 +99,9 @@ def sections_df(
 ) -> DataFrame:
     """Full section assembly; returns SECTIONS_OUT + ``order`` per doc.
 
-    ``persist`` caches the page-section pass: it is consumed twice (the
-    final union and the J5 anti-join).
+    ``persist`` materializes the page-section pass (``materialize``; its
+    release goes to ``cache_registry``): it is consumed twice (the final
+    union and the J5 anti-join).
 
     ``heading_registry``: a ``headings.HeadingRegistry`` of Column-expr
     confidence builders (default: the reference's three strategies) —
@@ -197,10 +199,10 @@ def sections_df(
         & pages["page"].between(intervals["iv_start"], intervals["iv_end"]),
         "left_anti",
     ).filter(non_blank(F.coalesce("content", F.lit(""))))
-    # full_path is derived AFTER the persist barrier below: referencing
+    # full_path is derived AFTER the stage barrier below: referencing
     # `title` twice in one projection makes CollapseProject inline the
-    # (regex-heavy) detection expression twice — post-cache it is a
-    # cheap concat over the materialized column
+    # (regex-heavy) detection expression twice — past the barrier it is
+    # a cheap concat over the materialized column
     page_sections = (
         uncovered.withColumn(
             "title",
@@ -225,12 +227,7 @@ def sections_df(
     )
 
     if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        page_sections = page_sections.persist(StorageLevel.MEMORY_AND_DISK)
-        page_sections.count()
-        if cache_registry is not None:
-            cache_registry.append(page_sections)
+        page_sections = materialize(page_sections, cache_registry)
 
     page_sections = page_sections.withColumn(
         "full_path",
@@ -312,15 +309,10 @@ def sections_df(
     # unique entry_order, page rows unique page, content rows unique
     # (page, intra_order)); the SHUFFLE_HASH hint keeps the big side a
     # hash probe — a sort-merge join would re-sort the strings and give
-    # the win straight back.  Both join branches read the CACHE, so the
-    # heavy lineage runs once (in production this is the Iceberg
-    # sections stage table).
-    from pyspark.storagelevel import StorageLevel
-
-    unioned = unioned.persist(StorageLevel.MEMORY_AND_DISK)
-    unioned.count()
-    if cache_registry is not None:
-        cache_registry.append(unioned)
+    # the win straight back.  Both join branches read the materialized
+    # rows, so the heavy lineage runs once (in production this is the
+    # Iceberg sections stage table).
+    unioned = materialize(unioned, cache_registry)
     key = ["doc_id", "page", "section_id", "pass_rank", "intra_order"]
     skinny = unioned.select(*key).withColumn(
         "order", F.row_number().over(w_order)

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
+from pdf_parser_spark.materialize import materialize
 from pdf_parser_spark.operators.exprs import (
     is_genuine_toc_entry,
     is_high_quality_entry,
@@ -220,22 +221,16 @@ def toc_entries_df(
     Returns TOC_OUT columns plus ``entry_order`` (the final sorted position
     per doc — consumed by the section stage's lead() boundaries W1).
 
-    ``persist`` caches the pandas-UDF feature stage and the primary pass:
-    three accept passes + two anti-joins consume them, and without a cache
+    ``persist`` materializes the pandas-UDF feature stage and the primary
+    pass (``materialize``; their releases go to ``cache_registry``):
+    three accept passes + two anti-joins consume them, and without that
     Catalyst re-executes the Arrow UDF once per consumer (SURVEY.md §4d —
     "keep pandas-UDF stages few and fused").
     """
     feats = _line_features_df(toc_candidate_lines(pages, cfg))
     if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        # eager materialization: the three passes fan out from feats in
-        # ONE downstream job; a lazy cache would run the Arrow UDF once
-        # per branch before any partition is cached
-        feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
-        feats.count()
-        if cache_registry is not None:
-            cache_registry.append(feats)
+        # the three passes fan out from feats in ONE downstream job
+        feats = materialize(feats, cache_registry)
 
     accepted_primary = (
         F.col("prim_matched")
@@ -259,12 +254,7 @@ def toc_entries_df(
         F.lit(0).alias("pass_rank"),
     )
     if persist:
-        from pyspark.storagelevel import StorageLevel
-
-        primary = primary.persist(StorageLevel.MEMORY_AND_DISK)
-        primary.count()
-        if cache_registry is not None:
-            cache_registry.append(primary)
+        primary = materialize(primary, cache_registry)
 
     # ---- enhanced pass (toc_parser.py:381-470) -------------------------
     enh = feats.filter(

@@ -9,7 +9,7 @@ orchestrator (main.py:96-116):
 
 Where the reference re-reads JSONL files between steps
 (main.py:194-202, section_parser.py:94-107 — SURVEY.md §2 S7), this build
-holds ONE cached pages DataFrame reused by steps 2-5 (SURVEY.md §4 P9).
+materializes ONE pages table reused by steps 2-5 (SURVEY.md §4 P9).
 
 Scale: the input is read with its on-disk doc_id-range layout
 (fixtures/gen.write_parquet mirrors the production Iceberg bucketing);
@@ -23,9 +23,9 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 from pdf_parser_spark.config import DEFAULT_CONFIG, PipelineConfig
+from pdf_parser_spark.materialize import materialize
 from pdf_parser_spark.operators import metadata as metadata_op
 from pdf_parser_spark.operators import metrics as metrics_op
 from pdf_parser_spark.operators import pages as pages_op
@@ -43,15 +43,14 @@ class PipelineResult:
     toc: DataFrame
     sections: DataFrame
     metrics: DataFrame
-    extra_cached: tuple = ()
+    #: one release per stage barrier the run materialized
+    releases: tuple = ()
 
     def unpersist(self) -> None:
-        for df in (self.pages, self.metadata, self.toc,
-                   self.sections, *self.extra_cached):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        """Drop the blocks of every stage barrier of the run.  The
+        tables must not be read afterwards."""
+        for release in self.releases:
+            release()
 
 
 def read_documents(spark: SparkSession, path: str) -> DataFrame:
@@ -70,7 +69,7 @@ def run_pipeline(
     cache: bool = True,
     normalize_html: bool = False,
 ) -> PipelineResult:
-    extra_cached: list = []
+    releases: list = []
     if normalize_html:
         # north rule: the corpus interleaves raw-HTML payload spans with
         # text + media — strip boilerplate and rewrite them to text spans
@@ -89,7 +88,7 @@ def run_pipeline(
         flat = normalize_html_flat(
             pages_op.explode_spans_raw(docs),
             cache_html=cache,
-            cache_registry=extra_cached,
+            cache_registry=releases,
         ).withColumn("error_kind", pages_op.error_kind_expr(cfg))
     else:
         flat = pages_op.explode_spans(docs, cfg)
@@ -108,30 +107,22 @@ def run_pipeline(
     pages = pages_op.pages_df(valid, cfg)
     if cache:
         # steps 2-5 all read pages; one materialization instead of the
-        # reference's three JSONL re-reads (S7).  Eager count: every stage
-        # fans out to several consumers inside single downstream jobs, and
-        # a lazy cache would recompute the lineage once per branch before
-        # any partition lands in the cache.  In production these stage
-        # boundaries are Iceberg tables (write = the materialization).
-        pages = pages.persist(StorageLevel.MEMORY_AND_DISK)
-        pages.count()
-
+        # reference's three JSONL re-reads (S7).  Each stage barrier also
+        # cuts the lineage, so later stages plan against a leaf.
+        pages = materialize(pages, releases)
     metadata = metadata_op.metadata_df(docs, pages, cfg)
     if cache:
-        metadata = metadata.persist(StorageLevel.MEMORY_AND_DISK)
-        metadata.count()
+        metadata = materialize(metadata, releases)
     toc = toc_op.toc_entries_df(
-        pages, metadata, cfg, persist=cache, cache_registry=extra_cached
+        pages, metadata, cfg, persist=cache, cache_registry=releases
     )
     if cache:
-        toc = toc.persist(StorageLevel.MEMORY_AND_DISK)
-        toc.count()
+        toc = materialize(toc, releases)
     sections = sections_op.sections_df(
-        pages, toc, metadata, cfg, persist=cache, cache_registry=extra_cached
+        pages, toc, metadata, cfg, persist=cache, cache_registry=releases
     )
     if cache:
-        sections = sections.persist(StorageLevel.MEMORY_AND_DISK)
-        sections.count()
+        sections = materialize(sections, releases)
     metrics = metrics_op.metrics_df(docs, pages, toc, sections, metadata)
 
     return PipelineResult(
@@ -142,7 +133,7 @@ def run_pipeline(
         toc=toc,
         sections=sections,
         metrics=metrics,
-        extra_cached=tuple(extra_cached),
+        releases=tuple(releases),
     )
 
 

@@ -304,7 +304,7 @@ def test_inline_normalize_matches_ingest_strip(spark):
 
 def test_normalize_html_flat_plan_shape(spark):
     """Inline normalization plan: exactly one Arrow stage, and with
-    cache_html the rewritten-rows leg reads the (tiny) in-memory table
+    cache_html the rewritten-rows leg reads the (tiny) materialized leaf
     — downstream consumers re-execute only the rest-branch scan."""
     from pdf_parser_spark.operators import pages as P
 
@@ -313,27 +313,11 @@ def test_normalize_html_flat_plan_shape(spark):
     out = bp.normalize_html_flat(
         P.explode_spans_raw(docs), cache_html=True, cache_registry=reg
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # prune the InMemoryRelation subtree (the printed build lineage of
-    # the cache, not what this query executes — tools/explain_audit.py)
-    lines, keep, prune_at = plan.splitlines(), [], None
-    for ln in lines:
-        ind = len(ln) - len(ln.lstrip(" :+-*"))
-        if prune_at is not None:
-            if ind > prune_at:
-                continue
-            prune_at = None
-        if "InMemoryRelation" in ln:
-            prune_at = ind
-            continue
-        keep.append(ln)
-    executed = "\n".join(keep)
+    executed = out._jdf.queryExecution().executedPlan().toString()
     assert executed.count("MapInPandas") == 0  # Python stage ran once
-    assert "InMemoryTableScan" in executed
+    assert "Scan ExistingRDD" in executed
     assert "BatchEvalPython" not in executed
-    # release the cache BEFORE the uncached variant, or the cache
-    # manager substitutes its identical subtree into the new plan
-    reg[0].unpersist()
+    reg[0]()
     uncached = bp.normalize_html_flat(
         P.explode_spans_raw(docs), cache_html=False
     )

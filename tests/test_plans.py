@@ -133,6 +133,43 @@ def test_w5_ordering_window_is_content_free(spark, docs_df):
     assert "row_number()" in plan
 
 
+def test_pipeline_stages_plan_against_materialized_leaves(spark, docs_df):
+    """With cache=True every stage barrier cuts the lineage: the
+    analysed plans of toc, sections and metrics read only the
+    materialized stage leaves (plus the raw docs metrics counts from) —
+    no span explode and no Python stage of an upstream layer, which
+    the driver would otherwise re-analyse at every later step."""
+    from pdf_parser_spark.pipeline import run_pipeline
+
+    def leaf_rdds(df):
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        ids = set()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            assert leaf.getClass().getSimpleName() == "LogicalRDD", (
+                leaf.toString()
+            )
+            ids.add(leaf.rdd().id())
+        return ids
+
+    res = run_pipeline(docs_df, cache=True)
+    try:
+        stage_leaves = set(leaf_rdds(docs_df))
+        for name in ("pages", "metadata", "toc", "sections"):
+            (leaf,) = leaf_rdds(getattr(res, name))  # one leaf per barrier
+            stage_leaves.add(leaf)
+        for name in ("toc", "sections", "metrics"):
+            df = getattr(res, name)
+            assert leaf_rdds(df) <= stage_leaves, name
+            text = df._jdf.queryExecution().analyzed().toString()
+            assert "posexplode" not in text, name
+            for node in ("MapInPandas", "ArrowEvalPython",
+                         "BatchEvalPython", "PythonUDF"):
+                assert node not in text, (name, node)
+    finally:
+        res.unpersist()
+
+
 def test_bucketed_docs_reassembly_is_shuffle_free(spark, docs_df, tmp_path):
     """North rule: "doc_id-range bucketing for shuffle-free reassembly".
     Reading the corpus from a doc_id-bucketed table, the scan itself

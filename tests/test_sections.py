@@ -61,24 +61,34 @@ def test_sections_parity(docs_df, oracle_results):
 
 
 def test_pipeline_unpersist_releases_all_internal_caches(spark, docs_df):
-    """Every persist() taken inside run_pipeline's operators (toc feats/
-    primary, page_sections, the W5 pre-order union) must be registered in
-    PipelineResult.extra_cached so unpersist() returns the executor
-    storage to its prior state — a long-lived cluster job running many
-    pipeline slices must not accumulate stage caches (MEMORY_AND_DISK
-    evicts from memory but pins disk until unpersist)."""
+    """Every stage barrier materialized inside run_pipeline (pages,
+    metadata, toc, sections, and the operators' toc feats/primary,
+    page_sections, the W5 pre-order union) must register a release in
+    PipelineResult.releases so unpersist() returns the executor storage
+    to its prior state — a long-lived cluster job running many pipeline
+    slices must not accumulate stage blocks (a local checkpoint's blocks
+    survive df.unpersist() and stay until their RDD is unpersisted)."""
     from pdf_parser_spark.pipeline import run_pipeline
 
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    before = {int(k) for k in jmap.keySet().toArray()}
+    jsc = spark.sparkContext._jsc
+
+    def persistent():
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    def stored():
+        return {i.id() for i in jsc.sc().getRDDStorageInfo()}
+
+    before, stored_before = persistent(), stored()
     res = run_pipeline(docs_df, cache=True)
-    res.sections.count()  # drive the W5 cached flow
-    assert len(res.extra_cached) >= 4  # feats, primary, page_sections, union
+    res.sections.count()
+    assert len(res.releases) == 8
+    assert stored() - stored_before  # the barriers really hold blocks
     res.unpersist()
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    after = {int(k) for k in jmap.keySet().toArray()}
     # subset, not equality: the JVM ContextCleaner may asynchronously
     # drop GC'd caches from EARLIER tests between the two snapshots —
     # the property under test is only that nothing run_pipeline created
     # survives its unpersist()
-    assert after <= before, f"leaked cache ids: {sorted(after - before)}"
+    leaked = persistent() - before
+    assert not leaked, f"leaked persistent ids: {sorted(leaked)}"
+    leaked = stored() - stored_before
+    assert not leaked, f"leaked block ids: {sorted(leaked)}"

@@ -281,3 +281,37 @@ def test_mega_doc_detection_from_pre_explode_docs(spark):
         )
     )
     assert plain == salted
+
+
+def test_over_1000_mega_docs_take_the_tag_join(spark):
+    """Adversarial corpus: more mega docs than the literal isin filter
+    takes.  The split must route them through the broadcast tag join
+    (the driver probes at most 1001 ids instead of collecting them all)
+    and stay bit-identical to the single-window plan."""
+    from pyspark.sql import functions as F
+
+    from pdf_parser_spark.operators import pages as P
+
+    rows = []
+    for d in range(1005):
+        for s, kind in enumerate(("text", "page_break", "text", "image")):
+            rows.append((
+                f"m{d:04d}", s, kind,
+                None if kind == "page_break" else f"doc {d} span {s}",
+                f"img-{d}" if kind == "image" else None,
+                s * 5,
+            ))
+    valid = spark.createDataFrame(
+        rows, ["doc_id", "seq", "kind", "text", "media_ref", "offset"]
+    )
+    docs = valid.groupBy("doc_id").agg(
+        F.collect_list(
+            F.struct("kind", "text", "media_ref", "offset")
+        ).alias("spans")
+    )
+    cfg = _low_threshold_cfg(threshold=3, buckets=2)
+    out = P.span_sequence_skew_df(valid, cfg, docs=docs)
+    assert "_mega" in out._jdf.queryExecution().optimizedPlan().toString()
+    plain = sorted(map(tuple, P.span_sequence_df(valid).collect()))
+    assert sorted(map(tuple, out.collect())) == plain
+    assert len(plain) == 1005 * 3

@@ -19,37 +19,16 @@ REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
 from pdf_parser_spark import driver_queries as dq  # noqa: E402
+from pdf_parser_spark.materialize import materialize  # noqa: E402
 from pdf_parser_spark.session import get_spark  # noqa: E402
 
 
-def _executed_tree(plan: str) -> str:
-    """The physical-plan tree with cached-relation subtrees pruned:
-    everything nested under an ``InMemoryRelation`` is the plan that
-    built the cache, not what this query executes — counting it inflates
-    shuffle/py-stage numbers by one full copy per cache reference."""
-    out = []
-    prune_indent = None
-    for line in plan.splitlines():
-        stripped = line.lstrip(" :+-*")
-        indent = len(line) - len(stripped)
-        if prune_indent is not None:
-            if indent > prune_indent:
-                continue
-            prune_indent = None
-        if "InMemoryRelation" in line:
-            prune_indent = indent
-            continue
-        out.append(line)
-    return "\n".join(out)
-
-
 def summarize(name: str, df) -> None:
-    raw = df._jdf.queryExecution().explainString(
+    plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
     )
-    plan = _executed_tree(raw)
 
     # formatted mode prints every node twice — once in the tree
     # ("+- * BroadcastHashJoin Inner BuildRight (4)") and once as a
@@ -79,7 +58,7 @@ def summarize(name: str, df) -> None:
         f"pushed={'Y' if pushed else '-'}"
     )
     if "-v" in sys.argv:
-        print(raw)
+        print(plan)
 
 
 def main() -> None:
@@ -122,37 +101,21 @@ def main() -> None:
     summarize("stage:span_sequence", P.span_sequence_df(valid))
     summarize("stage:pages", pages)
     summarize("stage:metadata", meta)
-    # audit the stages the way the pipeline actually runs them: each
-    # stage boundary materialized (persist=True ≙ the production Iceberg
-    # stage table), so downstream plans read InMemoryTableScan instead of
-    # re-inlining the upstream lineage — the un-persisted plan string
-    # duplicates every consumer branch and inflates exchange/py counts
-    # ~30x beyond anything that executes
-    pages = pages.persist()
-    pages.count()
-    meta = meta.persist()
-    meta.count()
-    toc = T.toc_entries_df(pages, meta, persist=True).persist()
-    toc.count()
-    # with toc itself cached this row reads ~all-zeros (a bare cache
-    # scan) — the authoritative per-stage plan assertions live in
-    # tests/test_plans.py (single Arrow stage, single exchange, etc.);
-    # the un-persisted printout here duplicates shared lazy subtrees
-    # hundreds of times and measures the PRINTER, not the job
-    summarize("stage:toc(cached-in)", toc)
-    sec = S.sections_df(pages, toc, meta, persist=True)
-    summarize("stage:sections(cached-in)", sec)
-    print(
-        "note: stage counts are PLAN-STRING occurrences.  The sections "
-        "plan references its cached inputs ~hundreds of times because "
-        "the union/anti-join branches repeat shared lazy subtrees in "
-        "the printout; at runtime each reference is one cache read and "
-        "ReuseExchange/AQE dedupe the rest — the executed job runs "
-        "~15 shuffle stages (see the Spark UI / bench stage counts), "
-        "not the printed number."
-    )
-    for df in (pages, meta, toc):
-        df.unpersist()
+    # audit the stages the way the pipeline runs them: each stage
+    # boundary materialized (≙ the production Iceberg stage table), so
+    # downstream plans read their inputs as a ``Scan ExistingRDD`` leaf
+    # instead of re-inlining the upstream lineage
+    releases: list = []
+    pages = materialize(pages, releases)
+    meta = materialize(meta, releases)
+    toc = T.toc_entries_df(pages, meta, persist=True, cache_registry=releases)
+    summarize("stage:toc", toc)
+    toc = materialize(toc, releases)
+    sec = S.sections_df(pages, toc, meta, persist=True,
+                        cache_registry=releases)
+    summarize("stage:sections", sec)
+    for release in releases:
+        release()
 
 
 if __name__ == "__main__":
